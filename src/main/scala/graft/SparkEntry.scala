@@ -94,7 +94,7 @@ object SparkEntry {
       .start()
     q.awaitTermination()
     // Detach the result from the sink's temp view so repeated invocations
-    // (Bench/QueryTime reps) don't pin every run's result set in driver
+    // (Bench reps) don't pin every run's result set in driver
     // memory for the JVM lifetime: copy the rows out, drop the view.
     val rows = s.table(name).collect()
     val schema = s.table(name).schema
@@ -468,7 +468,7 @@ object SparkEntry {
       val freshState = java.nio.file.Files.createTempDirectory("graft-incr-rep").toString
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(statePath), new java.io.File(freshState))
-      graft.run.IncrementalValidation.validateDelta(
+      graft.run.IncrementalValidation.validateDeltaAndCommit(
         s, store, "seqs", Some(dim), None, cfg, freshState, "incr-2")
         .manifest.select(col("partition_key"), col("row_count"),
           col("violation_count"), col("verdict"))
@@ -1022,11 +1022,12 @@ object SparkEntry {
       val fresh = TokenSeqs.fromDocuments(streamTable(s, dir, "documents"))
         .withColumn("doc_id", col("doc_id").cast("long"))
         .filter(col("doc_id") >= 400)
-      val buf = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+      // filled from the micro-batch thread, read here after termination
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
       val q = graft.streaming.StreamingDedup.nearDupSink(fresh, store, "docs",
           sigDir, "doc_id", "tokens", "source", minJaccard = 0.5,
-          onPairs = p => buf ++= p.select(col("id_a"), col("id_b"),
-            round(col("jaccard"), 6).as("jaccard")).collect())
+          onPairs = p => p.select(col("id_a"), col("id_b"),
+            round(col("jaccard"), 6).as("jaccard")).collect().foreach(buf.add))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1036,7 +1037,7 @@ object SparkEntry {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("jaccard",
           org.apache.spark.sql.types.DoubleType)))
-      s.createDataFrame(java.util.Arrays.asList(buf.toSeq: _*), schema)
+      s.createDataFrame(new java.util.ArrayList(buf), schema)
     }),
 
     // ---- t-digest quantile sketch (custom TypedImperativeAggregate).

@@ -2,7 +2,7 @@ package graft.run
 
 import graft.model.SchemaParser
 import graft.row.RowValidator
-import graft.snapshot.{AppendSnapshotStore, ManifestStore}
+import graft.snapshot.{AppendSnapshotStore, BatchLog, ManifestStore}
 import graft.table.TableChecks
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,17 +54,29 @@ final case class IncrementalResult(
   */
 object IncrementalValidation {
 
-  /** Validate everything appended to `table` since the last validated
-    * snapshot (all of it, on the first run), persist the delta's mergeable
-    * state under `stateDir`, and return delta violations + the merged
-    * manifest. Idempotent per snapshot: a re-run with no new snapshot
-    * returns the current merged state and appends nothing. */
-  def validateDelta(spark: SparkSession, store: AppendSnapshotStore, table: String,
-                    dim: Option[DataFrame], baseline: Option[DataFrame],
-                    cfg: PipelineConfig, stateDir: String, runId: String): IncrementalResult = {
+  /** The schema a state batch was validated under, a side file of the batch. */
+  private val SchemaFile = "_schema.json"
 
-    val doc = SchemaParser.parse(cfg.schemaJson)
-    val part = col(cfg.partCol)
+  /** Validate everything appended to `table` since the last validated
+    * snapshot (all of it, on the first run), commit the result under
+    * `stateDir`, and return delta violations + the merged manifest.
+    * Idempotent per snapshot: a re-run with no new snapshot returns the
+    * current merged state and appends nothing.
+    *
+    * Commit order, one commit point:
+    *  1. delta violations → `violations/snap=<id>` (a rerun overwrites the
+    *     same path with the same rows);
+    *  2. drift counts → `dist_counts/batch=<id>`;
+    *  3. mergeable state → `state/batch=<id>`, with the schema it was
+    *     validated under as a side file — THE COMMIT POINT: a snapshot counts
+    *     as validated iff its state batch exists, so a crash before it redoes
+    *     the whole delta (steps 1–2 are then overwritten or already there);
+    *  4. the merged manifest → `_manifest/batch=<id>`; a crash before it is
+    *     repaired by the next run, which finds the state but no manifest. */
+  def validateDeltaAndCommit(spark: SparkSession, store: AppendSnapshotStore,
+                             table: String, dim: Option[DataFrame],
+                             baseline: Option[DataFrame], cfg: PipelineConfig,
+                             stateDir: String, runId: String): IncrementalResult = {
     val cur = store.currentSnapshot(table)
       .getOrElse(throw new IllegalStateException(s"no committed snapshot in $table"))
     val state = new StateDir(spark, stateDir)
@@ -91,14 +103,43 @@ object IncrementalValidation {
             "transfer — revalidate the table into a fresh state dir")
       }
     }
-    state.recordSchema(cfg.schemaJson)
 
-    if (from >= cur) {
-      // nothing new — report current merged state, touch nothing
-      val manifest = mergedManifest(spark, state, baseline, cfg, runId, cur)
-      return IncrementalResult(emptyViolations(spark, cfg), manifest, from, cur)
-    }
+    val violations =
+      if (from >= cur) emptyViolations(spark, cfg)
+      else {
+        val d = planDelta(spark, store, table, from, cur, dim, cfg)
+        d.violations.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/violations/snap=$cur")
+        d.dist.foreach(state.dist.publish(cur.toString, _))
+        state.state.publish(cur.toString, d.state, Map(SchemaFile -> cfg.schemaJson))
+        d.digest.unpersist()
+        d.violations
+      }
+    val manifest = mergedManifest(spark, state, baseline, cfg, runId, cur)
+    // a snapshot validated before batch names were snapshot ids has its
+    // manifest under another name: append only for a state batch named `cur`
+    if (state.state.contains(cur.toString))
+      new ManifestStore(spark, stateDir).append(manifest, cur.toString)
+    IncrementalResult(violations, manifest, from, cur)
+  }
 
+  /** The same run as [[validateDeltaAndCommit]], which it calls: validating
+    * a delta always commits it, so its violations are never lost to a state
+    * batch that landed without them. */
+  def validateDelta(spark: SparkSession, store: AppendSnapshotStore, table: String,
+                    dim: Option[DataFrame], baseline: Option[DataFrame],
+                    cfg: PipelineConfig, stateDir: String, runId: String): IncrementalResult =
+    validateDeltaAndCommit(spark, store, table, dim, baseline, cfg, stateDir, runId)
+
+  /** One delta's outputs, computed but not yet written. `digest` is cached
+    * until the commit has written them. */
+  private final case class Delta(digest: DataFrame, violations: DataFrame,
+                                 state: DataFrame, dist: Option[DataFrame])
+
+  private def planDelta(spark: SparkSession, store: AppendSnapshotStore, table: String,
+                        from: Long, cur: Long, dim: Option[DataFrame],
+                        cfg: PipelineConfig): Delta = {
+    val doc = SchemaParser.parse(cfg.schemaJson)
+    val part = col(cfg.partCol)
     val delta = store.readBetween(table, from, cur).drop("_snap_id")
 
     // ---- fused delta scan → narrow digest (same shape as ValidationPipeline:
@@ -203,7 +244,6 @@ object IncrementalValidation {
       .withColumn("snapshot_id", lit(cur))
       .withColumn("partition_key", part.cast(StringType))
       .drop(cfg.partCol)
-    state.appendState(deltaState, cur)
 
     // ---- drift sufficient statistics: per-(partition, value) delta counts ----
     val distParts: Seq[DataFrame] =
@@ -218,33 +258,12 @@ object IncrementalValidation {
           .withColumn("v_num", lit(null).cast(DoubleType))
           .withColumn("column", lit(c))
       }
-    if (distParts.nonEmpty) {
-      val dist = distParts.map(_.select(part.cast(StringType).as("partition_key"),
+    val dist = if (distParts.isEmpty) None else Some(
+      distParts.map(_.select(part.cast(StringType).as("partition_key"),
           col("column"), col("v_num"), col("k_cat"), col("cnt")))
         .reduce(_ unionByName _)
-        .withColumn("snapshot_id", lit(cur))
-      state.appendDist(dist, cur)
-    }
-
-    digest.unpersist()
-    val manifest = mergedManifest(spark, state, baseline, cfg, runId, cur)
-    IncrementalResult(violations, manifest, from, cur)
-  }
-
-  /** validateDelta + persist: delta violations under
-    * `stateDir/violations/snap=<id>` (append-only, mirroring the data
-    * layout) and a manifest batch append — the checkpoint commit. */
-  def validateDeltaAndCommit(spark: SparkSession, store: AppendSnapshotStore,
-                             table: String, dim: Option[DataFrame],
-                             baseline: Option[DataFrame], cfg: PipelineConfig,
-                             stateDir: String, runId: String): IncrementalResult = {
-    val r = validateDelta(spark, store, table, dim, baseline, cfg, stateDir, runId)
-    if (r.toSnapshot > r.fromSnapshot) {
-      r.deltaViolations.write.mode(SaveMode.Overwrite)
-        .parquet(s"$stateDir/violations/snap=${r.toSnapshot}")
-      new ManifestStore(spark, stateDir).append(r.manifest)
-    }
-    r
+        .withColumn("snapshot_id", lit(cur)))
+    Delta(digest, violations, deltaState, dist)
   }
 
   // ------------------------------------------------------------------ merge
@@ -256,7 +275,7 @@ object IncrementalValidation {
   private def mergedManifest(spark: SparkSession, state: StateDir,
                              baseline: Option[DataFrame], cfg: PipelineConfig,
                              runId: String, snapshotId: Long): DataFrame = {
-    val all = state.readState()
+    val all = state.state.readAll()
     // merge ONLY state columns present in EVERY batch: a column introduced
     // mid-history (suite/statsCols config change) has no folded meaning for
     // the older deltas — and `all`'s schema resolution is nondeterministic
@@ -308,7 +327,7 @@ object IncrementalValidation {
     }
 
     // ---- drift from merged sufficient statistics ----
-    val dist = if (state.hasDist) Some(state.readDist()
+    val dist = if (state.dist.names.nonEmpty) Some(state.dist.readAll()
       .groupBy("partition_key", "column", "v_num", "k_cat")
       .agg(sum("cnt").as("cnt"))) else None
 
@@ -408,69 +427,32 @@ object IncrementalValidation {
       StructField("instanceLocation", StringType), StructField("message", StringType))))
   }
 
-  /** Append-only state under `dir`: `state/batch=*` (mergeable per-run
-    * per-partition rows) and `dist_counts/batch=*` (drift sufficient
-    * statistics). Same staging+rename atomic append as [[ManifestStore]].
-    *
-    * State batch dirs are named `batch=<snapshotId>-<uuid>`, so the standing
-    * job's "where did I leave off" question ([[lastValidatedSnapshot]]) is a
-    * directory LISTING, not a Spark job over every state batch — and stays
-    * crash-consistent, because the name becomes visible only with the atomic
-    * rename that commits the batch. */
+  /** Append-only state under `dir`: two [[BatchLog]]s, `state/batch=<id>`
+    * (mergeable per-run per-partition rows, plus the schema they were
+    * validated under as a side file) and `dist_counts/batch=<id>` (drift
+    * sufficient statistics), each batch named after the snapshot it
+    * validated. The standing job's "where did I leave off" question
+    * ([[lastValidatedSnapshot]]) is therefore a directory LISTING, not a
+    * Spark job over every state batch — and stays crash-consistent, because
+    * the name becomes visible only with the rename that commits the batch.
+    * Dirs written before names were snapshot ids hold `<id>-<uuid>` batches
+    * and a root `_schema.json`; both are still read. */
   private final class StateDir(spark: SparkSession, dir: String) {
-    private val stateDir = new Path(dir, "state")
-    private val distDir = new Path(dir, "dist_counts")
-    private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val state = new BatchLog(spark, new Path(dir, "state"))
+    val dist = new BatchLog(spark, new Path(dir, "dist_counts"))
 
-    private def append(root: Path, rows: DataFrame, snapId: Long): Unit = {
-      val batch = s"$snapId-${java.util.UUID.randomUUID().toString}"
-      val staging = new Path(root, s"_staging-$batch")
-      val target = new Path(root, s"batch=$batch")
-      // state/dist batches are manifest-/domain-sized — one file per append
-      rows.coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-      if (!fs(root).rename(staging, target))
-        throw new java.io.IOException(s"state commit rename failed: $target")
-    }
-    private def batchNames(root: Path): Seq[String] =
-      if (!fs(root).exists(root)) Seq.empty
-      else fs(root).listStatus(root).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-    private def isEmpty(root: Path): Boolean = batchNames(root).isEmpty
-    private def readAll(root: Path): DataFrame = {
-      // explicit committed-batch paths, not a glob: globs trip Spark's
-      // FileStreamSink metadata probe into logging spurious
-      // FileNotFoundException warns, and an explicit list can never race a
-      // concurrent staging rename
-      val paths = batchNames(root).map(n => new Path(root, n).toString)
-      require(paths.nonEmpty, s"no committed state batches under $root")
-      spark.read.option("basePath", root.toString)
-        .parquet(paths: _*).drop("batch")
-    }
+    private def snapshotOf(batch: String): Long = batch.takeWhile(_ != '-').toLong
 
-    /** The schema document the state was last validated under — the
+    def lastValidatedSnapshot: Long = state.names.map(snapshotOf).foldLeft(0L)(math.max)
+
+    /** The schema document the newest state batch was validated under — the
       * promotion guard's comparison point. */
-    def recordedSchema(): Option[String] = {
-      val p = new Path(dir, "_schema.json")
-      val f = fs(p)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-        finally in.close()
-      }
-    }
-
-    def recordSchema(json: String): Unit = {
-      val p = new Path(dir, "_schema.json")
-      val tmp = new Path(dir, s"_schema.json.tmp-${java.util.UUID.randomUUID()}")
-      val f = fs(p)
-      val out = f.create(tmp, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (f.exists(p)) f.delete(p, false)
-      if (!f.rename(tmp, p))
-        throw new java.io.IOException(s"schema record rename failed: $p")
-    }
+    def recordedSchema(): Option[String] =
+      state.names.sortBy(snapshotOf).lastOption.flatMap(state.readText(_, SchemaFile))
+        .orElse {
+          val legacy = new Path(dir, SchemaFile)
+          BatchLog.readText(legacy.getFileSystem(spark.sparkContext.hadoopConfiguration), legacy)
+        }
 
     /** Column names present in EVERY committed state batch — the set the
       * merge may legally fold. One direct parquet FOOTER read per batch (the
@@ -479,9 +461,9 @@ object IncrementalValidation {
     def carriedStateCols: Set[String] = {
       import scala.jdk.CollectionConverters._
       val conf = spark.sparkContext.hadoopConfiguration
-      val schemas = batchNames(stateDir).map { n =>
-        val dirPath = new Path(stateDir, n)
-        val file = fs(dirPath).listStatus(dirPath).toSeq.map(_.getPath)
+      val schemas = state.names.map { n =>
+        val dirPath = state.path(n)
+        val file = dirPath.getFileSystem(conf).listStatus(dirPath).toSeq.map(_.getPath)
           .find(_.getName.endsWith(".parquet"))
           .getOrElse(throw new IllegalStateException(s"no parquet file in state batch $dirPath"))
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -491,16 +473,5 @@ object IncrementalValidation {
       }
       if (schemas.isEmpty) Set.empty else schemas.reduce(_ intersect _)
     }
-
-    def appendState(rows: DataFrame, snapId: Long): Unit = append(stateDir, rows, snapId)
-    def appendDist(rows: DataFrame, snapId: Long): Unit = append(distDir, rows, snapId)
-    def hasState: Boolean = !isEmpty(stateDir)
-    def hasDist: Boolean = !isEmpty(distDir)
-    def readState(): DataFrame = readAll(stateDir)
-    def readDist(): DataFrame = readAll(distDir)
-    def lastValidatedSnapshot: Long =
-      batchNames(stateDir)
-        .map(_.stripPrefix("batch=").takeWhile(_ != '-').toLong)
-        .foldLeft(0L)(math.max)
   }
 }

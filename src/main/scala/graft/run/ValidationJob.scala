@@ -1,6 +1,6 @@
 package graft.run
 
-import graft.snapshot.ParquetSnapshotStore
+import graft.snapshot.AppendSnapshotStore
 import graft.tokens.TokenSeqs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -50,7 +50,7 @@ object ValidationJob {
     * Returns the JSON summary line. */
   def runOnce(spark: SparkSession, rows: Long, parts: Int, seed: Long,
               rate: Double, out: String, runId: String): String = {
-    val store = new ParquetSnapshotStore(spark, out)
+    val store = new AppendSnapshotStore(spark, out)
 
     // snapshot 1: clean baseline; snapshot 2: current with injected violations
     def withPart(df: DataFrame): DataFrame =
@@ -58,18 +58,20 @@ object ValidationJob {
     // crash-safe bootstrap: commit only the MISSING snapshot(s), so a crash
     // between the baseline commit (snap 1) and the current commit (snap 2)
     // resumes by synthesizing just snap 2 instead of skipping synthesis and
-    // failing forever on read(..., Some(2L)).
+    // failing forever on the read of snapshot 2.
     val committed = store.currentSnapshot("token_sequences").getOrElse(0L)
     if (committed < 1L)
-      store.commit("token_sequences",
+      store.commitAppend("token_sequences",
         withPart(TokenSeqs.synthesize(spark, rows, seed + 1, violationRate = 0.0,
           numPartitions = parts)), "part")
     if (committed < 2L)
-      store.commit("token_sequences",
+      store.commitAppend("token_sequences",
         withPart(TokenSeqs.synthesize(spark, rows, seed, violationRate = rate,
           numPartitions = parts)), "part")
-    val baseline = store.read("token_sequences", Some(1L))
-    val current = store.read("token_sequences", Some(2L))
+    // each snapshot holds only the rows its commit added
+    def snapshot(id: Long) = store.readBetween("token_sequences", id - 1, id).drop("_snap_id")
+    val baseline = snapshot(1L)
+    val current = snapshot(2L)
     val dim = spark.createDataFrame(
       Seq(("web", "common crawl"), ("books", "book corpus"),
           ("code", "source code"), ("wiki", "encyclopedia")))

@@ -4,94 +4,26 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Iceberg-style snapshot semantics emulated over partitioned Parquet
-  * (SURVEY §7.4.6 — no Iceberg jar ships in this sandbox; verified 0/287 jars).
-  *
-  * Layout of a snapshot table rooted at `root`:
+/** Iceberg APPEND-table semantics emulated over partitioned Parquet (no
+  * Iceberg jar ships with the engine). Layout of a table rooted at
+  * `root/<table>`:
   * {{{
-  *   root/snap=<id>/part=<k>/ ... .parquet  immutable data files per snapshot
-  *   root/_commits/<id>                    zero-byte commit marker (atomic rename)
+  *   snap=<id>/<partitionCol>=<k>/part-*   files added by snapshot <id>
+  *   _commits/<id>                          commit marker, created last; holds
+  *                                          the writer's idempotency token
+  *   _filestats/<id>                        per-file column min/max sidecar
+  *   compact=<id>/...                       snapshots <= <id> folded into one
+  *   _compactions/<id>                      compaction marker, created last
   * }}}
   *
-  * A snapshot is visible iff its commit marker exists — a crashed writer leaves
-  * data files but no marker, so readers never observe partial snapshots. This
-  * mirrors Iceberg's metadata-pointer swap at the fidelity the engine needs:
-  * snapshot-id-addressed immutable reads + append-only commits. The interface
-  * is deliberately small so a real Iceberg catalog can slot in unchanged.
-  */
-trait TableIO {
-  /** Latest committed snapshot id, if any. */
-  def currentSnapshot(table: String): Option[Long]
-  /** Read a specific snapshot (or the latest). */
-  def read(table: String, snapshotId: Option[Long] = None): DataFrame
-  /** Write a new snapshot; returns its id. `df` must carry `partitionCol`. */
-  def commit(table: String, df: DataFrame, partitionCol: String): Long
-}
-
-private[snapshot] object SnapshotWrite {
-  /** Cluster rows by the layout partition column before a `partitionBy`
-    * write. Without this, every write task holds one open parquet writer PER
-    * partition value and the snapshot lands as (tasks × |domain|) small
-    * files — at 1000 executors over a 16-value domain that is 16k writers
-    * and a file explosion every append. The AQE rebalance shuffle clusters
-    * each partition value into as few tasks as its size needs (splitting
-    * skewed values, unlike a plain `repartition(col)`), so each task writes
-    * ~1 file and the snapshot lands as ~|domain| right-sized files. */
-  def clustered(df: DataFrame, partitionCol: String): DataFrame =
-    df.hint("rebalance", col(partitionCol))
-}
-
-final class ParquetSnapshotStore(spark: SparkSession, root: String) extends TableIO {
-
-  private def tableRoot(table: String) = new Path(root, table)
-  private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def committedIds(table: String): Seq[Long] = {
-    val commits = new Path(tableRoot(table), "_commits")
-    val f = fs(commits)
-    if (!f.exists(commits)) Seq.empty
-    else f.listStatus(commits).toSeq.map(_.getPath.getName.toLong).sorted
-  }
-
-  override def currentSnapshot(table: String): Option[Long] =
-    committedIds(table).lastOption
-
-  override def read(table: String, snapshotId: Option[Long]): DataFrame = {
-    val id = snapshotId.orElse(currentSnapshot(table))
-      .getOrElse(throw new IllegalStateException(s"no committed snapshot in $table"))
-    require(committedIds(table).contains(id), s"snapshot $id of $table was never committed")
-    spark.read.parquet(new Path(tableRoot(table), s"snap=$id").toString)
-  }
-
-  override def commit(table: String, df: DataFrame, partitionCol: String): Long = {
-    val id = currentSnapshot(table).getOrElse(0L) + 1L
-    val dataPath = new Path(tableRoot(table), s"snap=$id")
-    // a crashed writer may have left partial data files for this id with no
-    // commit marker — that snapshot was never visible to any reader, so
-    // clearing it before the retry is safe (and ErrorIfExists would
-    // otherwise fail the retry forever).
-    val df0 = fs(dataPath)
-    if (df0.exists(dataPath)) df0.delete(dataPath, true)
-    SnapshotWrite.clustered(df, partitionCol).write.mode(SaveMode.ErrorIfExists)
-      .partitionBy(partitionCol).parquet(dataPath.toString)
-    // commit marker last — readers only see fully-written snapshots
-    val marker = new Path(new Path(tableRoot(table), "_commits"), id.toString)
-    val f = fs(marker)
-    f.mkdirs(marker.getParent)
-    val out = f.create(marker, false)
-    out.close()
-    id
-  }
-}
-
-/** Iceberg APPEND-table semantics: each snapshot directory holds ONLY the
-  * files added by that commit, and reading "the table as of snapshot s" is
-  * the union of all committed snapshot dirs ≤ s — which is exactly what
-  * makes INCREMENTAL processing possible: `readBetween(a, b)` reads only the
-  * delta files, so revalidating a 100 TB table after a 0.1% append costs
-  * 0.1% of a scan, not a full one. Same crash discipline as
-  * [[ParquetSnapshotStore]] (marker-last commits; uncommitted data dirs are
-  * invisible and cleared on retry).
+  * A snapshot is visible iff its commit marker exists — a crashed writer
+  * leaves data files but no marker, so readers never observe partial
+  * snapshots, and the retry clears the leftovers. Each snapshot directory
+  * holds ONLY the files added by that commit, and reading "the table as of
+  * snapshot s" is the union of all committed snapshot dirs ≤ s — which is
+  * exactly what makes INCREMENTAL processing possible: `readBetween(a, b)`
+  * reads only the delta files, so revalidating a 100 TB table after a 0.1%
+  * append costs 0.1% of a scan, not a full one.
   *
   * Every read carries a `_snap_id` lineage column (from the `snap=` path
   * partition, or a data column inside compacted files), so downstream
@@ -103,6 +35,17 @@ final class AppendSnapshotStore(spark: SparkSession, root: String) {
 
   private def tableRoot(table: String) = new Path(root, table)
   private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Cluster rows by the layout partition column before a `partitionBy`
+    * write. Without this, every write task holds one open parquet writer PER
+    * partition value and the snapshot lands as (tasks × |domain|) small
+    * files — at 1000 executors over a 16-value domain that is 16k writers
+    * and a file explosion every append. The AQE rebalance shuffle clusters
+    * each partition value into as few tasks as its size needs (splitting
+    * skewed values, unlike a plain `repartition(col)`), so each task writes
+    * ~1 file and the snapshot lands as ~|domain| right-sized files. */
+  private def clustered(df: DataFrame, partitionCol: String): DataFrame =
+    df.hint("rebalance", col(partitionCol))
 
   def committedIds(table: String): Seq[Long] = {
     val commits = new Path(tableRoot(table), "_commits")
@@ -130,10 +73,7 @@ final class AppendSnapshotStore(spark: SparkSession, root: String) {
       val f = fs(commits)
       if (f.exists(commits)) {
         f.listStatus(commits).foreach { st =>
-          val in = f.open(st.getPath)
-          val content = try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-          if (content == tok) return st.getPath.getName.toLong
+          if (BatchLog.readText(f, st.getPath).contains(tok)) return st.getPath.getName.toLong
         }
       }
     }
@@ -141,7 +81,7 @@ final class AppendSnapshotStore(spark: SparkSession, root: String) {
     val dataPath = new Path(tableRoot(table), s"snap=$id")
     val f = fs(dataPath)
     if (f.exists(dataPath)) f.delete(dataPath, true) // uncommitted leftovers
-    SnapshotWrite.clustered(df, partitionCol).write.mode(SaveMode.ErrorIfExists)
+    clustered(df, partitionCol).write.mode(SaveMode.ErrorIfExists)
       .partitionBy(partitionCol).parquet(dataPath.toString)
     // per-file column stats sidecar BEFORE the marker: a committed snapshot
     // always has stats; a crash leaves both invisible (see FileStats)
@@ -244,18 +184,22 @@ final class AppendSnapshotStore(spark: SparkSession, root: String) {
     * it covers the range (a `_snap_id` filter the scan can push down to
     * sorted row groups), plus the post-compaction snap dirs. Snap dirs below
     * a covering compaction are never touched — [[vacuum]] may have removed
-    * them. */
-  private def readRange(table: String, a: Long, b: Long): DataFrame =
+    * them. `b` must be a committed snapshot: an uncommitted id is an
+    * IllegalArgumentException, never a silently older table. */
+  private def readRange(table: String, a: Long, b: Long): DataFrame = {
+    val ids = committedIds(table)
+    require(ids.contains(b), s"snapshot $b of $table was never committed")
     latestCompaction(table).filter(_ > a) match {
       case Some(k) =>
         val fromCompact = readCompacted(table, k)
           .filter(col("_snap_id") > a && col("_snap_id") <= math.min(k, b))
-        val laterIds = committedIds(table).filter(id => id > math.max(a, k) && id <= b)
+        val laterIds = ids.filter(id => id > math.max(a, k) && id <= b)
         if (laterIds.isEmpty) fromCompact
         else fromCompact.unionByName(readSnaps(table, laterIds))
       case None =>
-        readSnaps(table, committedIds(table).filter(id => id > a && id <= b))
+        readSnaps(table, ids.filter(id => id > a && id <= b))
     }
+  }
 
   private def readCompacted(table: String, k: Long): DataFrame =
     spark.read.parquet(new Path(tableRoot(table), s"compact=$k").toString)
@@ -293,7 +237,7 @@ final class AppendSnapshotStore(spark: SparkSession, root: String) {
     val dataPath = new Path(tableRoot(table), s"compact=$upTo")
     val f = fs(dataPath)
     if (f.exists(dataPath)) f.delete(dataPath, true) // uncommitted leftovers
-    SnapshotWrite.clustered(data, partitionCol)
+    clustered(data, partitionCol)
       .sortWithinPartitions(col(partitionCol), col("_snap_id"))
       .write.mode(SaveMode.ErrorIfExists)
       .partitionBy(partitionCol).parquet(dataPath.toString)
@@ -503,43 +447,26 @@ private[snapshot] object FileStats {
   * lineage + checkpoint record. Each validated partition commits exactly one
   * row per run; resume anti-joins pending partitions against completed rows.
   *
-  * Physically: one small parquet directory per append under
-  * `root/_manifest/batch=<uuid>` — append never rewrites, matching Iceberg's
-  * append-only commit discipline.
+  * Physically a [[BatchLog]] at `root/_manifest`: one small parquet batch
+  * per append, never rewritten, matching Iceberg's append-only commit
+  * discipline.
   */
 final class ManifestStore(spark: SparkSession, root: String) {
 
-  private val manifestDir = new Path(root, "_manifest")
-  private def fs = manifestDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val log = new BatchLog(spark, new Path(root, "_manifest"))
 
-  def append(rows: DataFrame): Unit = {
-    val batch = java.util.UUID.randomUUID().toString
-    // write to a staging dir, then one atomic rename into the visible
-    // batch=* namespace — a crashed append leaves only invisible staging
-    // files (readAll lists batch= dirs only), never a partial batch
-    val staging = new Path(manifestDir, s"_staging-$batch")
-    val target = new Path(manifestDir, s"batch=$batch")
-    // manifest batches are partition-count-sized — one file per append keeps
-    // a standing job's manifest read at O(runs) files, not O(runs × tasks)
-    rows.coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"manifest commit rename failed: $target")
-  }
+  /** Append `rows` as batch `batch` (one file: manifest batches are
+    * partition-count-sized, so a standing job's manifest read stays at
+    * O(runs) files). A caller whose rows are fixed by what it validated
+    * names the batch after that, so a replayed append is a no-op; the
+    * default is a fresh name. Returns whether this call appended. */
+  def append(rows: DataFrame,
+             batch: String = java.util.UUID.randomUUID().toString): Boolean =
+    log.publish(batch, rows)
 
-  private def batchPaths: Seq[String] =
-    if (!fs.exists(manifestDir)) Seq.empty
-    else fs.listStatus(manifestDir).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith("batch=")).map(_.toString)
+  def isEmpty: Boolean = log.names.isEmpty
 
-  def isEmpty: Boolean = batchPaths.isEmpty
-
-  def readAll(): DataFrame = {
-    // explicit committed-batch paths, not a glob (a glob would both log
-    // spurious FileStreamSink warns and see uncommitted _staging dirs race by)
-    val paths = batchPaths
-    require(paths.nonEmpty, s"manifest at $manifestDir is empty")
-    spark.read.option("basePath", manifestDir.toString).parquet(paths: _*)
-  }
+  def readAll(): DataFrame = log.readAll()
 
   /** Partitions already completed for `runId` (tiny: one row per partition). */
   def completedPartitions(runId: String): DataFrame = {

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.snapshot.AppendSnapshotStore
+import graft.snapshot.{AppendSnapshotStore, BatchLog}
 import graft.table.Dedup
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming fuzzy (MinHash-LSH) near-dup detection against the accumulated
@@ -23,10 +23,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *     once across the stream's lifetime (when its LATER side arrives),
   *     because prior×prior pairs are dropped inside the bucket lists;
   *  3. the batch is committed to the snapshot store (idempotency token =
-  *     batchId, so a replayed micro-batch does not duplicate the corpus)
-  *     and its signatures land under `sigDir/batch=<batchId>` with
-  *     Overwrite — a replay rewrites the same partition rather than
-  *     double-appending.
+  *     batchId, so a replayed micro-batch does not duplicate the corpus),
+  *     then its signatures are published to the [[graft.snapshot.BatchLog]]
+  *     at `sigDir` as `batch=<batchId>` — if absent, so a replay neither
+  *     double-appends nor rewrites them. Signature batches written by other
+  *     means (e.g. a seed corpus' `batch=seed`) are read alike.
   *
   * At-least-once caveat (standard foreachBatch): a crash between `onPairs`
   * and the streaming checkpoint advancing can re-emit one batch's pairs on
@@ -61,14 +62,11 @@ object StreamingDedup {
                   onPairs: DataFrame => Unit): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
-        val spark = batch.sparkSession
-        val sigPath = new org.apache.hadoop.fs.Path(sigDir)
-        val fs = sigPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val sigs = new BatchLog(batch.sparkSession, new org.apache.hadoop.fs.Path(sigDir))
         val hasPrior = store.currentSnapshot(table).isDefined
+        val committed = sigs.names
         val priorSigs =
-          if (fs.exists(sigPath) && fs.listStatus(sigPath).nonEmpty)
-            Some(spark.read.parquet(sigDir).select("id", "sig"))
-          else None
+          if (committed.isEmpty) None else Some(sigs.read(committed).select("id", "sig"))
         val prior =
           if (hasPrior) store.readAsOf(table).drop("_snap_id")
           else batch.limit(0)
@@ -77,9 +75,8 @@ object StreamingDedup {
         onPairs(pairs)
         store.commitAppend(table, batch, partitionCol,
           idempotencyToken = Some(s"stream-dedup-batch-$batchId"))
-        Dedup.minhashSignatures(batch, idCol, tokensCol, k, seed)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$sigDir/batch=$batchId")
+        sigs.publish(batchId.toString,
+          Dedup.minhashSignatures(batch, idCol, tokensCol, k, seed)): Unit
       }
     }
 }

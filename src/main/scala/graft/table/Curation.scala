@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * counted stage is persisted before its count so the report costs one
   * materialization per boundary, not a re-execution of the prefix — on a
   * real cluster each boundary would be a checkpointed snapshot table
-  * ([[graft.snapshot.TableIO]]) and the report would read manifest row
+  * ([[graft.snapshot.AppendSnapshotStore]]) and the report would read manifest row
   * counts instead. */
 object Curation {
 

@@ -303,6 +303,76 @@ class IncrementalSpec extends SparkSpec {
     assert(r5.deltaViolations.filter(col("keyword").isin("maxItems", "maximum")).count() > 0)
   }
 
+  test("incremental: the schema record commits with the state batch it governs") {
+    val parts = 4
+    val store = new AppendSnapshotStore(spark, tmp())
+    val stateDir = tmp()
+    val bare = cfg.copy(riKey = None, driftNumCol = None, driftCatCol = None)
+    val tightened = bare.copy(
+      schemaJson = TokenSeqs.canonicalSchemaJson(maxTokens = 100))
+    store.commitAppend("seqs", gen(300, 81L, 0.0, parts), "part")
+    IncrementalValidation.validateDeltaAndCommit(
+      spark, store, "seqs", None, None, bare, stateDir, "run-1")
+    store.commitAppend("seqs", gen(100, 93L, 0.0, parts), "part")
+    // no root-level record to lose: the newest state batch carries it
+    val rootRecord = new java.io.File(stateDir, "_schema.json")
+    rootRecord.delete()
+    intercept[IllegalStateException] {
+      IncrementalValidation.validateDeltaAndCommit(
+        spark, store, "seqs", None, None, tightened, stateDir, "run-2")
+    }
+    // a state dir from before the record moved into the batches: its root
+    // copy still governs
+    val batchRecord = new java.io.File(stateDir, "state/batch=1/_schema.json")
+    assert(batchRecord.exists())
+    Files.move(batchRecord.toPath, rootRecord.toPath)
+    intercept[IllegalStateException] {
+      IncrementalValidation.validateDeltaAndCommit(
+        spark, store, "seqs", None, None, tightened, stateDir, "run-3")
+    }
+  }
+
+  test("incremental: a state dir in the uuid-named layout is read and appended to") {
+    val parts = 4
+    val store = new AppendSnapshotStore(spark, tmp())
+    val stateDir = tmp()
+    val bare = cfg.copy(riKey = None, driftCatCol = None)
+    val baseline = Some(gen(300, 999L, 0.0, parts))
+    store.commitAppend("seqs", gen(300, 81L, 0.0, parts), "part")
+    IncrementalValidation.validateDeltaAndCommit(
+      spark, store, "seqs", None, baseline, bare, stateDir, "run-1")
+    // rewrite into the older layout: `<snap>-<uuid>` state/dist batches, a
+    // uuid manifest batch, the schema record at the root
+    def mv(from: String, to: String): Unit =
+      Files.move(new java.io.File(stateDir, from).toPath, new java.io.File(stateDir, to).toPath)
+    mv("state/batch=1/_schema.json", "_schema.json")
+    mv("state/batch=1", "state/batch=1-8c0f")
+    mv("dist_counts/batch=1", "dist_counts/batch=1-3a1e")
+    mv("_manifest/batch=1", "_manifest/batch=5d2b-77e0")
+    val manifests = new graft.snapshot.ManifestStore(spark, stateDir)
+
+    // nothing new: the merged state is read, and nothing is appended
+    val r1 = IncrementalValidation.validateDeltaAndCommit(
+      spark, store, "seqs", None, baseline, bare, stateDir, "run-1b")
+    assert(r1.fromSnapshot == 1L && r1.toSnapshot == 1L)
+    assert(r1.manifest.collect().map(_.getAs[Long]("row_count")).sum == 300L)
+    assert(manifests.readAll().count() == parts)
+
+    store.commitAppend("seqs", gen(200, 92L, 0.0, parts), "part")
+    intercept[IllegalStateException] {
+      IncrementalValidation.validateDeltaAndCommit(spark, store, "seqs", None, baseline,
+        bare.copy(schemaJson = TokenSeqs.canonicalSchemaJson(maxTokens = 100)),
+        stateDir, "run-2")
+    }
+    val r2 = IncrementalValidation.validateDeltaAndCommit(
+      spark, store, "seqs", None, baseline, bare, stateDir, "run-2")
+    assert(r2.fromSnapshot == 1L && r2.toSnapshot == 2L)
+    assert(r2.manifest.collect().map(_.getAs[Long]("row_count")).sum == 500L)
+    val all = manifests.readAll()
+    assert(all.filter(col("run_id") === "run-2").count() == parts)
+    assert(all.count() == 2 * parts)
+  }
+
   // ------------------------------------------- incremental expectation fold
 
   test("incremental: expectation suite folds across appends and matches the batch pipeline") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.run.{PipelineConfig, ValidationJob, ValidationPipeline}
-import graft.snapshot.{ManifestStore, ParquetSnapshotStore}
+import graft.snapshot.{AppendSnapshotStore, ManifestStore}
 import graft.tokens.TokenSeqs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -156,27 +156,30 @@ class PipelineSpec extends SparkSpec {
 
   test("snapshot commit retries over a crashed (marker-less) partial write") {
     val out = tmp()
-    val store = new ParquetSnapshotStore(spark, out)
+    val store = new AppendSnapshotStore(spark, out)
     // fake a crashed writer: data files for snap=1 exist, no commit marker
     gen(50, 3L, 0.0, 2).write.partitionBy("part").parquet(s"$out/t/snap=1")
     assert(store.currentSnapshot("t").isEmpty)
-    val id = store.commit("t", gen(80, 4L, 0.0, 2), "part")
+    val id = store.commitAppend("t", gen(80, 4L, 0.0, 2), "part")
     assert(id == 1L)
-    assert(store.read("t", Some(1L)).count() == 80)
+    assert(store.readBetween("t", 0L, 1L).count() == 80)
   }
 
   test("snapshot store: commit/read isolation and marker-gated visibility") {
     val out = tmp()
-    val store = new ParquetSnapshotStore(spark, out)
+    val store = new AppendSnapshotStore(spark, out)
     assert(store.currentSnapshot("t").isEmpty)
     val df1 = gen(100, 1L, 0.0, 2)
-    val id1 = store.commit("t", df1, "part")
-    val id2 = store.commit("t", gen(200, 2L, 0.0, 2), "part")
+    val id1 = store.commitAppend("t", df1, "part")
+    val id2 = store.commitAppend("t", gen(200, 2L, 0.0, 2), "part")
     assert((id1, id2) == (1L, 2L))
-    assert(store.read("t", Some(1L)).count() == 100)
-    assert(store.read("t").count() == 200) // latest
+    assert(store.readBetween("t", 0L, 1L).count() == 100)
+    assert(store.readBetween("t", 1L, 2L).count() == 200) // latest
     // uncommitted snapshot dir (no marker) is invisible
-    intercept[IllegalArgumentException] { store.read("t", Some(99L)) }
+    gen(300, 5L, 0.0, 2).write.partitionBy("part").parquet(s"$out/t/snap=99")
+    intercept[IllegalArgumentException] { store.readBetween("t", 98L, 99L) }
+    intercept[IllegalArgumentException] { store.readAsOf("t", Some(99L)) }
+    assert(store.readAsOf("t").count() == 300)
   }
 
   test("ValidationJob.runOnce end-to-end: summary JSON + manifest + violations on disk") {
