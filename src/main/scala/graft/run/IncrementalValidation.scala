@@ -64,15 +64,16 @@ object IncrementalValidation {
     * current merged state and appends nothing.
     *
     * Commit order, one commit point:
-    *  1. delta violations → `violations/snap=<id>` (a rerun overwrites the
-    *     same path with the same rows);
+    *  1. delta violations → `violations/snap=<id>`;
     *  2. drift counts → `dist_counts/batch=<id>`;
     *  3. mergeable state → `state/batch=<id>`, with the schema it was
     *     validated under as a side file — THE COMMIT POINT: a snapshot counts
-    *     as validated iff its state batch exists, so a crash before it redoes
-    *     the whole delta (steps 1–2 are then overwritten or already there);
-    *  4. the merged manifest → `_manifest/batch=<id>`; a crash before it is
-    *     repaired by the next run, which finds the state but no manifest. */
+    *     as validated iff its state batch exists. A crash before it leaves
+    *     steps 1–2 behind; the rerun deletes them first, as it may cover a
+    *     later snapshot and would otherwise count them twice;
+    *  4. the merged manifest → `_manifest/batch=<id>`; lost in a crash, it is
+    *     re-appended by a rerun with no new snapshot, or superseded by the
+    *     next snapshot's. */
   def validateDeltaAndCommit(spark: SparkSession, store: AppendSnapshotStore,
                              table: String, dim: Option[DataFrame],
                              baseline: Option[DataFrame], cfg: PipelineConfig,
@@ -107,8 +108,9 @@ object IncrementalValidation {
     val violations =
       if (from >= cur) emptyViolations(spark, cfg)
       else {
+        state.dropUncommitted(from)
         val d = planDelta(spark, store, table, from, cur, dim, cfg)
-        d.violations.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/violations/snap=$cur")
+        d.violations.write.mode(SaveMode.ErrorIfExists).parquet(state.violations(cur).toString)
         d.dist.foreach(state.dist.publish(cur.toString, _))
         state.state.publish(cur.toString, d.state, Map(SchemaFile -> cfg.schemaJson))
         d.digest.unpersist()
@@ -441,9 +443,21 @@ object IncrementalValidation {
     val state = new BatchLog(spark, new Path(dir, "state"))
     val dist = new BatchLog(spark, new Path(dir, "dist_counts"))
 
+    private val violationsDir = new Path(dir, "violations")
+    def violations(snapshotId: Long): Path = new Path(violationsDir, s"snap=$snapshotId")
+
     private def snapshotOf(batch: String): Long = batch.takeWhile(_ != '-').toLong
 
     def lastValidatedSnapshot: Long = state.names.map(snapshotOf).foldLeft(0L)(math.max)
+
+    /** Delete the violations and drift counts that runs which crashed
+      * before their state batch left above snapshot `from`. One writer. */
+    def dropUncommitted(from: Long): Unit = {
+      val fs = violationsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val viol = if (fs.exists(violationsDir)) fs.listStatus(violationsDir).toSeq else Nil
+      (viol.map(_.getPath).filter(_.getName.stripPrefix("snap=").toLongOption.exists(_ > from)) ++
+        dist.names.filter(snapshotOf(_) > from).map(dist.path)).foreach(fs.delete(_, true))
+    }
 
     /** The schema document the newest state batch was validated under — the
       * promotion guard's comparison point. */

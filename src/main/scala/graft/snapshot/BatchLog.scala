@@ -40,35 +40,34 @@ final class BatchLog(spark: SparkSession, root: Path) {
 
   /** Commit `rows` as batch `name` in one file, with `sideFiles` (name →
     * text; names start with `_`) beside it — unless `name` is already
-    * committed. Returns whether this call committed it. */
+    * committed. */
   def publish(name: String, rows: DataFrame,
-              sideFiles: Map[String, String] = Map.empty): Boolean = {
+              sideFiles: Map[String, String] = Map.empty): Unit = {
     val f = fs
     val target = path(name)
     // Hadoop renames a directory INTO an existing target dir, so the
     // if-absent check must come before the rename, not from its result
-    if (f.exists(target)) return false
-    val staging = new Path(root, s"_staging-$name")
-    if (f.exists(staging)) f.delete(staging, true) // a crashed writer's leftovers
-    rows.coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
-    sideFiles.foreach { case (file, text) =>
-      require(file.startsWith("_"), s"side file $file must be hidden from readers")
-      val out = f.create(new Path(staging, file), false)
-      try out.write(text.getBytes(UTF_8)) finally out.close()
+    if (!f.exists(target)) {
+      val staging = new Path(root, s"_staging-$name")
+      if (f.exists(staging)) f.delete(staging, true) // a crashed writer's leftovers
+      rows.coalesce(1).write.mode(SaveMode.ErrorIfExists).parquet(staging.toString)
+      sideFiles.foreach { case (file, text) =>
+        require(file.startsWith("_"), s"side file $file must be hidden from readers")
+        val out = f.create(new Path(staging, file), false)
+        try out.write(text.getBytes(UTF_8)) finally out.close()
+      }
+      if (!f.rename(staging, target))
+        throw new java.io.IOException(s"batch commit rename failed: $target")
     }
-    if (!f.rename(staging, target))
-      throw new java.io.IOException(s"batch commit rename failed: $target")
-    true
   }
 
-  /** The committed batches `batchNames`, as one DataFrame. */
-  def read(batchNames: Seq[String]): DataFrame = {
+  /** Every committed batch, as one DataFrame read from explicit paths. */
+  def readAll(): DataFrame = {
+    val batchNames = names
     require(batchNames.nonEmpty, s"no committed batches under $root")
     spark.read.option("basePath", root.toString)
       .parquet(batchNames.map(path(_).toString): _*).drop("batch")
   }
-
-  def readAll(): DataFrame = read(names)
 
   /** Side file `file` of batch `name`, if it has one. */
   def readText(name: String, file: String): Option[String] =

@@ -459,9 +459,9 @@ final class ManifestStore(spark: SparkSession, root: String) {
     * partition-count-sized, so a standing job's manifest read stays at
     * O(runs) files). A caller whose rows are fixed by what it validated
     * names the batch after that, so a replayed append is a no-op; the
-    * default is a fresh name. Returns whether this call appended. */
+    * default is a fresh name. */
   def append(rows: DataFrame,
-             batch: String = java.util.UUID.randomUUID().toString): Boolean =
+             batch: String = java.util.UUID.randomUUID().toString): Unit =
     log.publish(batch, rows)
 
   def isEmpty: Boolean = log.names.isEmpty

@@ -64,9 +64,8 @@ object StreamingDedup {
       if (!batch.isEmpty) {
         val sigs = new BatchLog(batch.sparkSession, new org.apache.hadoop.fs.Path(sigDir))
         val hasPrior = store.currentSnapshot(table).isDefined
-        val committed = sigs.names
         val priorSigs =
-          if (committed.isEmpty) None else Some(sigs.read(committed).select("id", "sig"))
+          if (sigs.names.isEmpty) None else Some(sigs.readAll().select("id", "sig"))
         val prior =
           if (hasPrior) store.readAsOf(table).drop("_snap_id")
           else batch.limit(0)
@@ -76,7 +75,7 @@ object StreamingDedup {
         store.commitAppend(table, batch, partitionCol,
           idempotencyToken = Some(s"stream-dedup-batch-$batchId"))
         sigs.publish(batchId.toString,
-          Dedup.minhashSignatures(batch, idCol, tokensCol, k, seed)): Unit
+          Dedup.minhashSignatures(batch, idCol, tokensCol, k, seed))
       }
     }
 }

@@ -79,8 +79,8 @@ class CrashSweepSpec extends SparkSpec {
     .toDF("source", "description")
 
   private def gen(rows: Long, seed: Long, rate: Double): DataFrame =
-    TokenSeqs.synthesize(spark, rows, seed, rate, numPartitions = 2)
-      .withColumn("part", pmod(xxhash64(coalesce(col("doc_id"), lit(""))), lit(4)))
+    TokenSeqs.synthesize(spark, rows, seed, rate, numPartitions = 1)
+      .withColumn("part", pmod(xxhash64(coalesce(col("doc_id"), lit(""))), lit(2)))
 
   private val cfg = PipelineConfig(TokenSeqs.canonicalSchemaJson())
 
@@ -100,40 +100,65 @@ class CrashSweepSpec extends SparkSpec {
   private def manifest(dir: String): Seq[String] =
     rows(new ManifestStore(spark, dir).readAll().drop("committed_at", "run_id", "batch"))
 
-  /** Run `once(root)` against a fresh copy of `template` for every crash
-    * point, rerunning on the plain filesystem after each crash; every
-    * outcome must equal the uncrashed one. */
-  private def sweep[A](template: String)(once: String => Unit)(outcome: String => A): Unit = {
+  /** For every publish step k of `once`: run it against a fresh copy of
+    * `template` dying at k, then `recover` what the crash left — rerun on the
+    * plain filesystem, after whatever else lands first — and require the
+    * outcome `recover` reports after a run that never crashed. */
+  private def sweep[A](template: String)(once: String => Unit)(recover: String => A): Unit = {
     val clean = copy(template)
     val n = CrashFS.armed(0)(once(s"crash://$clean"))
     assert(n > 0, "no publish step seen")
-    val expected = outcome(clean)
+    val expected = recover(clean)
     for (k <- 1 to n) {
       val dir = copy(template)
       intercept[Exception](CrashFS.armed(k)(once(s"crash://$dir")))
-      once(s"file://$dir")
-      assert(outcome(dir) == expected, s"crash at publish step $k of $n")
+      assert(recover(dir) == expected, s"crash at publish step $k of $n")
     }
+  }
+
+  /** Rerun `once` on the plain filesystem, then take its `outcome`. */
+  private def rerun[A](once: String => Unit)(outcome: String => A)(dir: String): A = {
+    once(s"file://$dir")
+    outcome(dir)
+  }
+
+  private lazy val baseline = gen(200, 9L, 0.0)
+
+  private def validate(root: String): Unit = {
+    IncrementalValidation.validateDeltaAndCommit(spark,
+      new AppendSnapshotStore(spark, s"$root/table"), "seqs", Some(dim),
+      Some(baseline), cfg, s"$root/state", "run")
+    spark.catalog.clearCache()
   }
 
   test("crash sweep: incremental commit (violations, drift counts, state, manifest)") {
     val template = tmp()
-    val baseline = gen(200, 9L, 0.0)
     val store = new AppendSnapshotStore(spark, s"$template/table")
     store.commitAppend("seqs", gen(200, 1L, 0.05), "part")
-    IncrementalValidation.validateDeltaAndCommit(spark, store, "seqs", Some(dim),
-      Some(baseline), cfg, s"$template/state", "run-1")
+    validate(template)
     store.commitAppend("seqs", gen(200, 2L, 0.05), "part")
 
-    sweep(template) { root =>
-      IncrementalValidation.validateDeltaAndCommit(spark,
-        new AppendSnapshotStore(spark, s"$root/table"), "seqs", Some(dim),
-        Some(baseline), cfg, s"$root/state", "run-2")
-      spark.catalog.clearCache()
-    } { dir =>
+    sweep(template)(validate) { dir =>
+      // rerun with no new snapshot, and on a copy, after another append: a
+      // crash before the state batch makes that rerun validate snapshots 2
+      // and 3 as one delta, so what the crashed run left must not count
+      // twice. Quantiles are left out there: a t-digest merge depends on how
+      // rows were grouped into deltas, every other metric is an exact merge.
+      val later = copy(dir)
+      validate(s"file://$dir")
       val st = s"$dir/state"
       val v = s"$st/violations/snap=2"
-      (Some(v).filter(new File(_).exists).map(p => rows(spark.read.parquet(p))), manifest(st))
+      val alone = (Some(v).filter(new File(_).exists).map(p => rows(spark.read.parquet(p))),
+        manifest(st))
+      new AppendSnapshotStore(spark, s"$later/table")
+        .commitAppend("seqs", gen(200, 3L, 0.05), "part")
+      validate(s"file://$later")
+      val lst = s"$later/state"
+      val after = (rows(spark.read.parquet(s"$lst/violations").drop("snap")),
+        rows(new ManifestStore(spark, lst).readAll().filter(col("snapshot_id") === 3L)
+          .withColumn("metrics", map_filter(col("metrics"), (k, _) => !k.rlike("^p[0-9]+_")))
+          .drop("committed_at", "run_id", "batch")))
+      (alone, after)
     }
   }
 
@@ -142,13 +167,14 @@ class CrashSweepSpec extends SparkSpec {
     val facts = s"$template/facts"
     gen(200, 3L, 0.05).write.parquet(facts)
 
-    sweep(template) { root =>
+    def once(root: String): Unit = {
       ValidationPipeline.runAndCommit(spark, spark.read.parquet(facts), Some(dim), None,
         cfg, "run-b", s"$root/out")
       spark.catalog.clearCache()
-    } { dir =>
-      (rows(spark.read.parquet(s"$dir/out/violations")), manifest(s"$dir/out"))
     }
+    sweep(template)(once)(rerun(once) { dir =>
+      (rows(spark.read.parquet(s"$dir/out/violations")), manifest(s"$dir/out"))
+    })
   }
 
   test("crash sweep: streaming near-dup micro-batch replay (corpus, signatures, pairs)") {
@@ -169,7 +195,7 @@ class CrashSweepSpec extends SparkSpec {
     // per copy: its input stream, how many batches it was fed, pairs emitted
     val fed = scala.collection.mutable.Map[String, (MemoryStream[DedupDoc], Int)]()
     val pairs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
-    sweep(template) { root =>
+    def once(root: String): Unit = {
       // feed the batches not fed yet; a restart from the checkpoint first
       // replays the micro-batch a crash cut short
       val dir = new Path(root).toUri.getPath
@@ -187,11 +213,12 @@ class CrashSweepSpec extends SparkSpec {
           q.processAllAvailable()
         }
       } finally q.stop()
-    } { dir =>
+    }
+    sweep(template)(once)(rerun(once) { dir =>
       val got = pairs.toArray.collect { case (d, a, b) if d == dir => (a, b) }.toSet
       val corpus = new AppendSnapshotStore(spark, s"$dir/table").readAsOf("docs").count()
       val sigIds = spark.read.parquet(s"$dir/sigs").select("id").as[Long].collect().sorted.toSeq
       (got, corpus, sigIds)
-    }
+    })
   }
 }
